@@ -6,6 +6,7 @@ import graft.sources.ParquetStore
 import graft.types._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** The reference's default models and prompt task
   * (extension/src/api.rs:159-223), single-sourced: the Scala API
@@ -158,11 +159,11 @@ final class VectorizeEngine(
         baseUrl = param("base_url"), apiKey = param("api_key"))
     }
 
-  // private[graft]: the streaming path (Realtime.processBatch) merges
-  // into the same tables — one naming scheme, not two copies.
+  // private[graft]: the oracle queries and tests read these tables
+  // directly — one naming scheme, not two copies.
   private[graft] def embTable(job: String) = s"_embeddings_$job"
   private[graft] def tokTable(job: String) = s"_search_tokens_$job"
-  private[graft] def appTable(job: String) = s"_append_$job"
+  private def appTable(job: String) = s"_append_$job"
 
   /** The (pkey, embeddings, updated_at) frame for a job regardless of
     * table method: join keeps a separate `_embeddings_<job>` table;
@@ -244,104 +245,80 @@ final class VectorizeEngine(
   }
 
   /** `vectorize.job_execute` / cron target
-    * (extension/src/executor.rs:43-96): incremental delta scan →
-    * embed → MERGE. Idempotent — safe under at-least-once retries.
-    *
-    * The delta and the embedded rows are persisted for the duration
-    * of the refresh: `embedded` is referenced by the MERGE (twice —
-    * anti-join + union) AND the returned count, and `delta` by both
-    * the embedding and the search-tokens pass. Without the persist
-    * each reference would re-run the whole pipeline INCLUDING the
-    * provider calls — with a paid HTTP provider that multiplies cost
-    * per refresh (the count alone doubled it).
+    * (extension/src/executor.rs:43-96): the delta scan — source rows
+    * lacking an embedding or updated since it — through the one write
+    * path [[applyDelta]], the same body a realtime micro-batch runs.
+    * Both table methods scan the job's (pkey, embeddings, updated_at)
+    * view. Idempotent — safe under at-least-once retries. Returns the
+    * number of rows embedded.
     */
-  def refreshJob(jobName: String): Long = job(jobName) match {
-    case Some(j) if j.tableMethod == TableMethod.Append => refreshAppend(j)
-    case Some(j) => refreshJoin(j)
-    case None => throw new NoSuchElementException(s"no such job: $jobName")
+  def refreshJob(jobName: String): Long = {
+    val j = job(jobName).getOrElse(throw new NoSuchElementException(s"no such job: $jobName"))
+    applyDelta(j, Pipeline.deltaScanJoin(sources(j.srcTable), embeddingsOf(j),
+      j.primaryKey, j.updateTimeCol))
   }
 
-  private def refreshJoin(job: VectorizeJob): Long = {
-    val src = sources(job.srcTable)
-    val embName = embTable(job.jobName)
-    val delta = (
-      if (store.exists(embName))
-        Pipeline.deltaScanJoin(src, store.read(embName), job.primaryKey, job.updateTimeCol)
-      else src
-    ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  /** The one embedding write path, shared by [[refreshJob]] and the
+    * realtime micro-batch ([[graft.streaming.Realtime.processBatch]]).
+    * `rows` are changed source rows, at most one per key:
+    *  1. persisted and counted once — every step below reads them, and
+    *     an empty delta (a no-op refresh or micro-batch) stops here;
+    *  2. their search tokens MERGE FIRST: a refresh's retry delta is
+    *     derived from embedding staleness, so a crash after the tokens
+    *     MERGE re-runs both MERGEs (idempotent), while the reverse
+    *     order would lose the tokens of already-embedded rows forever;
+    *  3. embedded once through the provider, the result persisted so
+    *     the vector write and the index upsert do not each re-call
+    *     (and re-pay) the provider;
+    *  4. the vectors MERGEd by [[writeVectors]];
+    *  5. the job's vector index at `indexPath`, if given, upserted
+    *     (replays rebuild byte-identical partitions, so it stays
+    *     idempotent too).
+    * Returns the number of rows embedded (one vector per row).
+    */
+  private[graft] def applyDelta(job: VectorizeJob, rows: DataFrame,
+      indexPath: Option[String] = None): Long = {
+    val delta = rows.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // Tokens FIRST, embeddings second: the retry delta is derived
-      // from embedding staleness, so a crash after the tokens MERGE
-      // re-runs both merges (idempotent), while the reverse order
-      // would lose the tokens of already-embedded rows forever.
-      val tokens = Pipeline.renderSearchTokens(delta, job.primaryKey, job.srcColumns)
-      store.merge(tokTable(job.jobName), tokens, "pkey")
-      val inputs = Pipeline.renderInputs(delta, job.primaryKey, job.srcColumns)
-      val embedded = Pipeline.embed(inputs, provider(job), job.model.apiName)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        store.merge(embName, embedded, "pkey")
-        embedded.count() // served from cache — no provider re-call
-      } finally embedded.unpersist()
+      // an RDD count: one job, where Dataset.count adds an aggregate
+      // exchange stage
+      val n = delta.rdd.count()
+      if (n > 0) {
+        store.merge(tokTable(job.jobName),
+          Pipeline.renderSearchTokens(delta, job.primaryKey, job.srcColumns), "pkey")
+        val embedded = Pipeline.embed(
+          Pipeline.renderInputs(delta, job.primaryKey, job.srcColumns),
+          provider(job), job.model.apiName).persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          writeVectors(job, delta, embedded)
+          indexPath.foreach(p =>
+            upsertVectorIndex(job.jobName, p, embedded.select("pkey", "embeddings")))
+        } finally embedded.unpersist()
+      }
+      n
     } finally delta.unpersist()
   }
 
-  /** Append method (extension/src/executor.rs:98-133): the reference
-    * keeps embeddings + bookkeeping ON the source table. Spark-side
-    * equivalent: a wide `_append_<job>` table = all source columns +
-    * pkey + embeddings + `__emb_updated_at`, rebuilt by MERGE-ing
-    * freshly embedded rows into the previous bookkeeping and joining
-    * back to the (authoritative) source. Search reads embeddings
-    * straight from the wide table — one fewer join at query time,
-    * which is the method's point.
+  /** MERGE vectors `vecs` (pkey, embeddings, updated_at) of the source
+    * rows `rows` into the table the job serves from — the one writer
+    * of both vector tables, for [[applyDelta]] and [[importEmbeddings]].
+    * Join jobs keep them in `_embeddings_<job>`. Append jobs
+    * (extension/src/executor.rs:98-133) keep the reference's
+    * embeddings-on-the-source-table layout as a wide `_append_<job>`
+    * table = source columns + pkey + embeddings + `__emb_updated_at`,
+    * so search reads embeddings without a join (the method's point);
+    * only the rows' wide rows are MERGEd — a full rebuild would be
+    * O(|table|) per refresh. A backfill's delta is the whole source,
+    * so the first MERGE writes every source row.
     */
-  private def refreshAppend(job: VectorizeJob): Long = {
-    val aName = appTable(job.jobName)
-    val src = sources(job.srcTable)
-    val withPkey = src.withColumn("pkey", col(job.primaryKey).cast("string"))
-    val book =
-      if (store.exists(aName))
-        store.read(aName).select(col("pkey"), col("embeddings"), col("__emb_updated_at"))
-          .filter(col("embeddings").isNotNull)
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          Pipeline.embeddingSchema.fields.map(f =>
-            if (f.name == "updated_at") f.copy(name = "__emb_updated_at") else f)))
-    val joined = withPkey.join(book, Seq("pkey"), "left_outer")
-    val stale = job.updateTimeCol match {
-      case Some(u) => col("__emb_updated_at").isNull || col(u) > col("__emb_updated_at")
-      case None    => col("__emb_updated_at").isNull
+  private def writeVectors(job: VectorizeJob, rows: DataFrame, vecs: DataFrame): Unit =
+    job.tableMethod match {
+      case TableMethod.Append =>
+        val wide = rows.withColumn("pkey", col(job.primaryKey).cast("string"))
+          .join(vecs.withColumnRenamed("updated_at", "__emb_updated_at"), Seq("pkey"))
+        store.merge(appTable(job.jobName), wide, "pkey")
+      case _ => store.merge(embTable(job.jobName), vecs, "pkey")
     }
-    val delta = joined.filter(stale)
-      .select(withPkey.columns.map(col).toIndexedSeq: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // tokens first — same crash-retry argument as refreshJoin
-      val tokens = Pipeline.renderSearchTokens(delta, job.primaryKey, job.srcColumns)
-      store.merge(tokTable(job.jobName), tokens, "pkey")
-      val inputs = Pipeline.renderInputs(delta, job.primaryKey, job.srcColumns)
-      val embedded = Pipeline.embed(inputs, provider(job), job.model.apiName)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = embedded.count()
-        if (!store.exists(aName)) {
-          // initial build: the full wide table, including not-yet-
-          // embedded rows with null embeddings (the reference ALTERs
-          // the source table, so every row is present from day one)
-          val newBook = embedded.withColumnRenamed("updated_at", "__emb_updated_at")
-          store.overwrite(aName, withPkey.join(newBook, Seq("pkey"), "left_outer"))
-        } else {
-          // incremental: MERGE only the delta's wide rows — a full
-          // overwrite here would be O(|table|) per refresh, defeating
-          // the bucketed store (the streaming path already merges)
-          val wide = delta.join(
-            embedded.withColumnRenamed("updated_at", "__emb_updated_at"), Seq("pkey"))
-          store.merge(aName, wide, "pkey")
-        }
-        n
-      } finally embedded.unpersist()
-    } finally delta.unpersist()
-  }
 
   /** `vectorize.import_embeddings` (extension/src/api.rs:250-326):
     * copy precomputed vectors for rows not already embedded.
@@ -375,35 +352,16 @@ final class VectorizeEngine(
     // Imported rows must be lexically searchable too: the refresh
     // delta skips them (they have embeddings), so their search
     // tokens are rendered here from the source rows.
-    val srcForTokens = sources(j.srcTable).join(incoming.select("pkey"),
+    val imported = sources(j.srcTable).join(incoming.select("pkey"),
       col(j.primaryKey).cast("string") === col("pkey"), "left_semi")
     store.merge(tokTable(jobName),
-      Pipeline.renderSearchTokens(srcForTokens, j.primaryKey, j.srcColumns), "pkey")
-    j.tableMethod match {
-      case TableMethod.Append =>
-        // Append jobs serve from the wide `_append_` table — vectors
-        // imported into `_embeddings_` would be dead data AND the
-        // next refresh would re-embed (and re-pay for) every row.
-        val aName = appTable(jobName)
-        val withPkey = sources(j.srcTable)
-          .withColumn("pkey", col(j.primaryKey).cast("string"))
-        val fresh =
-          if (store.exists(aName))
-            incoming.join(store.read(aName)
-              .filter(col("embeddings").isNotNull).select("pkey"),
-              Seq("pkey"), "left_anti")
-          else incoming
-        val wide = withPkey.join(
-          fresh.withColumnRenamed("updated_at", "__emb_updated_at"), Seq("pkey"))
-        store.merge(aName, wide, "pkey")
-      case _ =>
-        val embName = embTable(jobName)
-        val fresh =
-          if (store.exists(embName))
-            incoming.join(store.read(embName).select("pkey"), Seq("pkey"), "left_anti")
-          else incoming
-        store.merge(embName, fresh, "pkey")
-    }
+      Pipeline.renderSearchTokens(imported, j.primaryKey, j.srcColumns), "pkey")
+    // Vectors only for rows not already embedded, into the table the
+    // job serves from: for an append job, vectors in `_embeddings_`
+    // would be dead data AND the next refresh would re-embed (and
+    // re-pay for) every row.
+    writeVectors(j, imported,
+      incoming.join(embeddingsOf(j).select("pkey"), Seq("pkey"), "left_anti"))
   }
 
   /** `vectorize.table_from` (extension/src/api.rs:328-390). */

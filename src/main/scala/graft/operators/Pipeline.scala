@@ -36,11 +36,13 @@ object Pipeline {
     StructField("updated_at", TimestampType)
   ))
 
-  /** S1 — delta scan, join method (core/src/query.rs:556-596): rows
-    * lacking embeddings or updated since their embedding. One
-    * left_outer join on pkey + null/watermark filter (Catalyst plans
-    * a single shuffle; at scale this is the idiomatic incremental
-    * scan — compare Delta CDF).
+  /** S1 — delta scan (core/src/query.rs:556-596): rows lacking
+    * embeddings or updated since their embedding. `emb` is a job's
+    * (pkey, embeddings, updated_at) view, so one scan serves both
+    * table methods (the append method's view projects its wide
+    * table). One left_outer join on pkey + null/watermark filter
+    * (Catalyst plans a single shuffle; at scale this is the idiomatic
+    * incremental scan — compare Delta CDF).
     */
   def deltaScanJoin(src: DataFrame, emb: DataFrame, pk: String,
       updateCol: Option[String]): DataFrame = {
@@ -57,40 +59,15 @@ object Pipeline {
     joined.filter(stale).select(src.columns.map(src(_)).toIndexedSeq: _*)
   }
 
-  /** S2 — delta scan, append method (extension/src/executor.rs:98-133):
-    * the embedding bookkeeping lives on the source table itself as
-    * `<job>_updated_at`.
+  /** S4 — render rows into embed inputs: pkey as text + labeled
+    * concatenation of the text columns + token estimate
+    * (core/src/query.rs:598-626).
     */
-  def deltaScanAppend(src: DataFrame, updateCol: String, jobUpdatedCol: String): DataFrame =
-    src.filter(
-      col(updateCol) > coalesce(col(jobUpdatedCol), to_timestamp(lit("0001-01-01"))))
-
-  /** S3 — fetch-by-ids (worker/src/executor.rs:100-128): load the rows
-    * named in a queue message. Semi-join keeps it distributed (no
-    * isin() literal explosion for large batches).
-    */
-  def fetchByIds(src: DataFrame, ids: DataFrame, pk: String): DataFrame =
-    src.join(ids.selectExpr(s"cast(value as string) as __id"),
-      src(pk).cast("string") === col("__id"), "left_semi")
-
-  /** S4 — render rows into embed inputs: pkey as text + concatenated
-    * text columns + token estimate (core/src/query.rs:598-626).
-    * `variant` selects among the reference's three intentionally
-    * different concat styles (P1 space / P2 csv / P3 labeled).
-    */
-  def renderInputs(src: DataFrame, pk: String, textCols: Seq[String],
-      variant: String = "labeled"): DataFrame = {
-    val cols = textCols.map(col)
-    val text = variant match {
-      case "space" => concatCols(cols)
-      case "csv" => concatColsCsv(cols)
-      case _ => concatColsLabeled(textCols, cols)
-    }
+  def renderInputs(src: DataFrame, pk: String, textCols: Seq[String]): DataFrame =
     src.select(
       col(pk).cast("string").as("record_id"),
-      trimInputs(text).as("text"))
+      trimInputs(concatColsLabeled(textCols, textCols.map(col))).as("text"))
       .withColumn("token_estimate", tokenEstimate(col("text")))
-  }
 
   /** R4 — greedy token-budget batching (core/src/query.rs:630-651):
     * pack consecutive inputs until the batch exceeds `batchSize`

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.VectorizeEngine
-import graft.operators.Pipeline
-import graft.types.{TableMethod, VectorizeJob}
+import graft.types.VectorizeJob
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -12,22 +11,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The reference's realtime mode is trigger → pgmq queue → background
   * worker (SURVEY §2.9 R1-R5). The Spark-native equivalent collapses
   * the queue into Structured Streaming micro-batches: a stream of
-  * source rows drives `foreachBatch`, each batch is rendered,
-  * embedded, and MERGEd — idempotently, so the at-least-once
-  * delivery of checkpoint recovery preserves correctness exactly the
-  * way the reference's `ON CONFLICT DO UPDATE` upsert does
-  * (worker/src/ops.rs:8-70).
+  * source rows drives `foreachBatch`, and each batch goes through the
+  * same write path as a cron `refreshJob`
+  * ([[VectorizeEngine.applyDelta]]: search tokens MERGE first, then
+  * one embed, then the vectors MERGE) — idempotently, so the
+  * at-least-once delivery of checkpoint recovery preserves
+  * correctness exactly the way the reference's `ON CONFLICT DO
+  * UPDATE` upsert does (worker/src/ops.rs:8-70).
   */
 object Realtime {
 
-  /** Process one micro-batch of changed source rows for `job`:
-    * render → embed → MERGE embeddings + search tokens. This is the
-    * exact body of the reference worker's execute_job
-    * (worker/src/executor.rs:60-160) re-expressed on DataFrames.
+  /** Process one micro-batch of changed source rows for `job`: keep
+    * the last version of each key, then apply the rows through the
+    * engine's one write path, [[VectorizeEngine.applyDelta]] — tokens
+    * MERGE, embed, vectors MERGE, index upsert, in the order and with
+    * the persists a `refreshJob` uses. This is the body of the
+    * reference worker's execute_job (worker/src/executor.rs:60-160)
+    * re-expressed on DataFrames. An empty batch stops at the write
+    * path's row count.
     */
   def processBatch(engine: VectorizeEngine, job: VectorizeJob, batch: DataFrame,
       indexPath: Option[String] = None): Unit = {
-    if (batch.isEmpty) return
     // A micro-batch may contain several versions of one key (insert
     // then update, or at-least-once redelivery): keep only the last
     // writer per pkey (by update_time_col when present) so the MERGE
@@ -48,39 +52,12 @@ object Realtime {
         // should declare update_time_col.
         batch.dropDuplicates(job.primaryKey)
     }
-    val inputs = Pipeline.renderInputs(deduped, job.primaryKey, job.srcColumns)
-    // persisted: the store MERGE runs two actions (touched-bucket
-    // collect + write), each of which would otherwise re-run the
-    // mapPartitions provider calls — 2x API cost per micro-batch
-    // (same guard refreshJoin documents)
-    val embedded = Pipeline.embed(inputs, engine.provider(job), job.model.apiName)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      job.tableMethod match {
-        case TableMethod.Append =>
-          // Append jobs are served from the wide `_append_<job>` table
-          // (VectorizeEngine.embeddingsOf) — merge the embedded rows
-          // there, joined back to their source columns, or streamed
-          // updates would never become searchable.
-          val withPkey = deduped.withColumn("pkey", col(job.primaryKey).cast("string"))
-          val wide = withPkey.join(
-            embedded.withColumnRenamed("updated_at", "__emb_updated_at"), Seq("pkey"))
-          engine.store.merge(engine.appTable(job.jobName), wide, "pkey")
-        case _ =>
-          engine.store.merge(engine.embTable(job.jobName), embedded, "pkey")
-      }
-      val tokens = Pipeline.renderSearchTokens(deduped, job.primaryKey, job.srcColumns)
-      engine.store.merge(engine.tokTable(job.jobName), tokens, "pkey")
-      // keep the job's ANN index fresh alongside the store (the
-      // reference's pgvector index updates with every upsert): the
-      // partition-granular upsert rebuilds only touched graph
-      // partitions, and replays reproduce byte-identical partitions,
-      // so at-least-once redelivery stays idempotent here too
-      indexPath.foreach { p =>
-        engine.upsertVectorIndex(job.jobName, p,
-          embedded.select(col("pkey"), col("embeddings")))
-      }
-    } finally embedded.unpersist()
+    // back to the batch's own partition count (an empty batch may have
+    // none): the write path persists its rows, and a cached plan keeps
+    // the dedupe's shuffle partitions uncoalesced — each one a provider
+    // call and a task in every later stage
+    engine.applyDelta(job,
+      deduped.coalesce(math.max(batch.rdd.getNumPartitions, 1)), indexPath)
   }
 
   /** Start the realtime pipeline from a streaming DataFrame of source

@@ -251,6 +251,15 @@ class EngineSpec extends AnyFunSuite {
     engine.refreshJob("products")
     assert(CountingProvider.embedded.get() == 41,
       s"one stale row must cost exactly one embed call, got ${CountingProvider.embedded.get() - 40}")
+    // a realtime micro-batch runs the same write path: N streamed rows
+    // → exactly N provider inputs
+    val streamed = Fixtures.myProducts(spark).filter(col("product_id") <= 3)
+    val dir = TestSpark.tempDir("graft_eng_stream_")
+    Fixtures.writeStreamFile(streamed, dir)
+    Fixtures.streamPass(engine, "products", streamed.schema, dir,
+      TestSpark.tempDir("graft_eng_ckpt_"))
+    assert(CountingProvider.embedded.get() == 44,
+      s"3 streamed rows must cost exactly 3 embed calls, got ${CountingProvider.embedded.get() - 41}")
   }
 
   test("cron schedule: JobScheduler refreshes a due job with no explicit refreshJob (R6)") {
@@ -452,6 +461,21 @@ class EngineSpec extends AnyFunSuite {
     e2.registerSource("content", updatedRows)
     val astro2 = e2.search("append_job", "astronauts", limit = 1).collect()
     assert(astro2.head.getAs[Int]("id") == 1)
+
+    // a realtime micro-batch runs the same write path: N streamed rows
+    // (one update, one insert) → exactly N provider inputs
+    val streamed = Seq((2, "pencil sharpener", Fixtures.futureTs(1)),
+      (4, "apples and apple trees", Fixtures.futureTs(2))).toDF("id", "content", "updated_at")
+    val dir = TestSpark.tempDir("graft_eng_stream_")
+    Fixtures.writeStreamFile(streamed, dir)
+    val beforeStream = CountingProvider.embedded.get()
+    Fixtures.streamPass(e2, "append_job", streamed.schema, dir,
+      TestSpark.tempDir("graft_eng_ckpt_"))
+    assert(CountingProvider.embedded.get() == beforeStream + 2,
+      "2 streamed rows must cost exactly 2 embed calls")
+    assert(e2.store.read("_append_append_job")
+      .filter(col("pkey") === "4" && col("embeddings").isNotNull).count() == 1,
+      "the streamed insert must land in the wide table")
   }
 
   test("delete job is idempotent and survives restart") {

@@ -87,12 +87,28 @@ object Fixtures {
     rows.map { case (id, c, sec) => (id, c, ts(sec)) }
       .toDF("id", "content", "updated_at")
   }
+
+  /** Append `rows` as one parquet file to the stream directory `dir`. */
+  def writeStreamFile(rows: DataFrame, dir: String): Unit =
+    rows.coalesce(1).write.mode("append").parquet(dir)
+
+  /** One `Realtime.runAvailableNow` pass of `jobName` over the parquet
+    * stream directory `dir` (rows of `schema`) from `checkpoint`; a
+    * failed micro-batch rethrows here.
+    */
+  def streamPass(engine: VectorizeEngine, jobName: String,
+      schema: org.apache.spark.sql.types.StructType, dir: String, checkpoint: String): Unit = {
+    val q = graft.streaming.Realtime.runAvailableNow(engine, jobName,
+      engine.spark.readStream.schema(schema).parquet(dir), checkpoint)
+    require(q.awaitTermination(60000), "stream pass did not finish in time")
+  }
 }
 
 /** Deterministic provider that counts every input it embeds, to prove
-  * the refresh pipeline calls the provider EXACTLY once per row (the
+  * the write path calls the provider EXACTLY once per row (the
   * reference pays per API call; a double materialization would double
-  * the bill — VectorizeEngine.refreshJob persists for this reason).
+  * the bill — VectorizeEngine.applyDelta, which both refreshJob and
+  * every realtime micro-batch run, persists for this reason).
   * The counter is a JVM-global (tests run local[*], one JVM).
   */
 object CountingProvider {
@@ -103,6 +119,25 @@ final class CountingProvider(dim: Int = 64) extends EmbeddingProvider {
   override def modelDim(model: String): Int = inner.modelDim(model)
   override def generateEmbeddings(model: String, inputs: Seq[String]): Seq[Array[Float]] = {
     CountingProvider.embedded.addAndGet(inputs.size)
+    inner.generateEmbeddings(model, inputs)
+  }
+}
+
+/** Deterministic provider that throws on its first call after
+  * `FlakyProvider.failNext` is armed — a provider outage landing
+  * between the write path's tokens MERGE and its vectors MERGE. The
+  * flag is a JVM-global like CountingProvider's counter: each task
+  * deserializes its own provider copy.
+  */
+object FlakyProvider {
+  val failNext = new java.util.concurrent.atomic.AtomicBoolean(false)
+}
+final class FlakyProvider(dim: Int = 64) extends EmbeddingProvider {
+  private val inner = new DeterministicHashProvider(dim)
+  override def modelDim(model: String): Int = inner.modelDim(model)
+  override def generateEmbeddings(model: String, inputs: Seq[String]): Seq[Array[Float]] = {
+    if (FlakyProvider.failNext.getAndSet(false))
+      throw new IllegalStateException("provider unavailable")
     inner.generateEmbeddings(model, inputs)
   }
 }

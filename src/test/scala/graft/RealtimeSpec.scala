@@ -215,6 +215,93 @@ class RealtimeSpec extends AnyFunSuite {
     assert(!engine.store.exists("_embeddings_rta_job"))
   }
 
+  // One write path: a job backfilled over three rows, then one update
+  // (stamped newer than any embedding) and one insert, applied either
+  // by refreshJob over the new source or as one streamed micro-batch.
+  private val baseRows = Seq((1, "pizza", 1L), (2, "pencil", 2L), (3, "airplane", 3L))
+  private def changedRows = {
+    import spark.implicits._
+    Seq((1, "a space shuttle carries astronauts", Fixtures.futureTs(0)),
+      (4, "apples and apple trees", Fixtures.futureTs(1))).toDF("id", "content", "updated_at")
+  }
+  private def changedSource =
+    Fixtures.contentTable(spark, baseRows).filter(col("id") =!= 1).unionByName(changedRows)
+
+  private def backfilled(method: TableMethod,
+      provider: providers.EmbeddingProvider = new providers.DeterministicHashProvider(64))
+      : VectorizeEngine = {
+    val e = new VectorizeEngine(spark, TestSpark.tempDir("graft_rtw_wh_"),
+      embeddingProviderOverride = Some(provider))
+    e.registerSource("content", Fixtures.contentTable(spark, baseRows))
+    e.createJob(VectorizeJob("w_job", "content", Seq("content"), "id",
+      Some("updated_at"), Model.parseUnsafe("deterministic/hash-64"), tableMethod = method))
+    e
+  }
+
+  private def streamChanged(e: VectorizeEngine, dir: String, checkpoint: String): Unit =
+    Fixtures.streamPass(e, "w_job", changedRows.schema, dir, checkpoint)
+
+  /** pkey → embeddings of the table the job serves from. */
+  private def vectors(e: VectorizeEngine, method: TableMethod): Map[String, Seq[Float]] =
+    e.store.read(if (method == TableMethod.Append) "_append_w_job" else "_embeddings_w_job")
+      .select("pkey", "embeddings").collect()
+      .map(r => r.getString(0) -> r.getSeq[Float](1).toSeq).toMap
+
+  private def tokens(e: VectorizeEngine): Set[(String, Seq[String], Seq[Int])] =
+    e.store.read("_search_tokens_w_job")
+      .select("pkey", "search_tokens", "search_token_counts").collect()
+      .map(r => (r.getString(0), r.getSeq[String](1).toSeq, r.getSeq[Int](2).toSeq)).toSet
+
+  test("batch and stream give the same stores (join and append jobs)") {
+    for (method <- Seq(TableMethod.Join, TableMethod.Append)) {
+      val batch = backfilled(method)
+      batch.registerSource("content", changedSource)
+      assert(batch.refreshJob("w_job") == 2)
+      val stream = backfilled(method)
+      val dir = TestSpark.tempDir("graft_rtw_in_")
+      Fixtures.writeStreamFile(changedRows, dir)
+      streamChanged(stream, dir, TestSpark.tempDir("graft_rtw_ckpt_"))
+      assert(vectors(batch, method).size == 4)
+      assert(vectors(stream, method) == vectors(batch, method), s"$method: embeddings differ")
+      assert(tokens(stream) == tokens(batch), s"$method: search tokens differ")
+    }
+  }
+
+  test("a provider crash between the tokens and vectors MERGEs heals on rerun (batch and stream)") {
+    for (method <- Seq(TableMethod.Join, TableMethod.Append)) {
+      val clean = backfilled(method)
+      clean.registerSource("content", changedSource)
+      clean.refreshJob("w_job")
+
+      // refreshJob fails after its tokens MERGE; the rerun's delta
+      // (embedding staleness) still holds every changed row
+      val batch = backfilled(method, new FlakyProvider(64))
+      val oldVectors = vectors(batch, method)
+      batch.registerSource("content", changedSource)
+      FlakyProvider.failNext.set(true)
+      intercept[Exception](batch.refreshJob("w_job"))
+      assert(tokens(batch) == tokens(clean), s"$method: tokens MERGE must precede the embed")
+      assert(vectors(batch, method) == oldVectors, s"$method: no vector may land after the crash")
+      assert(batch.refreshJob("w_job") == 2)
+      assert(vectors(batch, method) == vectors(clean, method), s"$method: refresh rerun embeddings")
+      assert(tokens(batch) == tokens(clean), s"$method: refresh rerun tokens")
+
+      // the same crash inside a micro-batch: the uncommitted batch
+      // replays from its checkpoint
+      val stream = backfilled(method, new FlakyProvider(64))
+      val dir = TestSpark.tempDir("graft_rtw_in_")
+      val checkpoint = TestSpark.tempDir("graft_rtw_ckpt_")
+      Fixtures.writeStreamFile(changedRows, dir)
+      FlakyProvider.failNext.set(true)
+      intercept[Exception](streamChanged(stream, dir, checkpoint))
+      assert(tokens(stream) == tokens(clean), s"$method: tokens MERGE must precede the embed")
+      assert(vectors(stream, method) == oldVectors, s"$method: no vector may land after the crash")
+      streamChanged(stream, dir, checkpoint)
+      assert(vectors(stream, method) == vectors(clean, method), s"$method: replay embeddings")
+      assert(tokens(stream) == tokens(clean), s"$method: replay tokens")
+    }
+  }
+
   test("windowed counts and sessionize run in streaming mode (smoke)") {
     import spark.implicits._
     val events = Seq(
